@@ -19,6 +19,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..utils import spread_scan, sql_with_frames
 
@@ -53,9 +62,9 @@ def _exploded_shingles(
     """(id, shingle) pairs via a pure slice/arrays_zip projection — ZERO
     shuffles before the consumer's own aggregation.
 
-    r11 rewrite: the original lead-window formulation (posexplode + n-1
-    ``lead``s over ``Window.partitionBy(id)``) paid a full Exchange+Sort of
-    EVERY TOKEN in the corpus just to stitch adjacent tokens back together —
+    Not a lead-window formulation: posexplode + n-1 ``lead``s over
+    ``Window.partitionBy(id)`` would pay a full Exchange+Sort of EVERY
+    TOKEN in the corpus just to stitch adjacent tokens back together —
     at 100 TB that is a corpus-sized shuffle before any dedup work starts,
     and on the bench it is one extra AQE stage in every shingle consumer.
     Slicing the per-doc token array n ways and zipping restores adjacency
@@ -149,28 +158,6 @@ def minhash_signatures(
     return sig.select(F.col(id_col), F.expr(arr).alias("signature"))
 
 
-def _shuffle_hash(df: DataFrame) -> DataFrame:
-    """Join-strategy marker for the banded-join build sides — now a no-op by
-    default: the static SHUFFLE_HASH hint is replaced by AQE's runtime
-    SMJ->SHJ conversion (``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold``,
-    set in ``utils.get_spark``), which picks the strategy from the ACTUAL
-    shuffle sizes instead of pinning it at plan time.
-
-    Measured both ways (tools/ab_shuffle_hash.py): the static hint won at
-    sf10 (sort-merge would SORT the quadratic candidate set: 21.8 -> 11.3 s
-    on the 100x-clone corpus) but LOST at sf0.1 (minhash 1.0 -> 1.7 s,
-    BASELINE.md round-7 A/B) because it also blocks AQE's broadcast-join
-    conversion that small inputs want. The AQE threshold keeps both wins:
-    broadcast when the build side is tiny, shuffled-hash when partitions fit
-    the threshold, sort-merge only when they genuinely don't fit memory.
-    ``MLFS_FORCE_SHUFFLE_HASH=1`` restores the static hint for A/Bs."""
-    import os
-
-    if os.environ.get("MLFS_FORCE_SHUFFLE_HASH") == "1":
-        return df.hint("shuffle_hash")
-    return df
-
-
 def _cap_buckets(
     bands: DataFrame, bucket_cols: list, max_bucket_size: int | None
 ) -> DataFrame:
@@ -233,8 +220,11 @@ def _attach_est_jaccard(
     query 21.8 → 11.3 s when the sorts are avoided). The build side is
     per-doc signatures — unskewed, bounded per partition — so a hash build
     is memory-safe at any corpus scale. AQE makes that call at runtime from
-    actual partition sizes (``maxShuffledHashJoinLocalMapThreshold``, see
-    ``_shuffle_hash``), broadcasting instead when the signatures are tiny.
+    actual partition sizes (``maxShuffledHashJoinLocalMapThreshold`` in
+    ``utils.get_spark``), broadcasting instead when the signatures are tiny.
+    Each side is also statically broadcast when it alone passes
+    :func:`_attach_broadcast`: a small probe must not drag a large index
+    into a broadcast.
 
     Agreement via one ``aggregate(zip_with(...))`` — measured fastest of
     the equivalent forms on the 100× corpus (see the A/B note in
@@ -242,17 +232,13 @@ def _attach_est_jaccard(
     it blows the generated method past HotSpot's JIT limit). Sum of
     ``CAST(x = y AS INT)`` equals the count of agreeing slots, so
     est_jaccard is value-identical to the former filter/size form."""
-    import os
-
-    if os.environ.get("MLFS_FORCE_SHUFFLE_HASH") != "1" and _attach_broadcast(
-        sigs_a
-    ):
-        # gated broadcast (see _attach_broadcast): the second shuffle join
-        # would re-exchange pair rows already carrying sig_a's payload
-        sigs_a, sigs_b = F.broadcast(sigs_a), F.broadcast(sigs_b)
-    pairs = pairs.join(_shuffle_hash(sigs_a), a_col).join(
-        _shuffle_hash(sigs_b), b_col
-    )
+    # a broadcast side keeps the pair rows, already carrying the other
+    # side's signature payload, from being re-exchanged by its join key
+    if _attach_broadcast(sigs_a):
+        sigs_a = F.broadcast(sigs_a)
+    if _attach_broadcast(sigs_b):
+        sigs_b = F.broadcast(sigs_b)
+    pairs = pairs.join(sigs_a, a_col).join(sigs_b, b_col)
     agree = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
         F.lit(0),
@@ -287,8 +273,6 @@ def _minhash_lsh_candidates_grouped(
     band's bucket is uncapped (``NOT array_min(_cap)``) — identical
     signatures agree on every band. Multiset-pinned against the row-space
     plan by ``test_minhash_candidates_grouped_matches_rowspace``."""
-    import os
-
     spark = signatures.sparkSession
     rpb = max(1, num_hashes // num_bands)
     iq = f"`{id_col}`"
@@ -350,20 +334,11 @@ def _minhash_lsh_candidates_grouped(
             f"LATERAL VIEW posexplode(_ids) tb AS pb, ib "
             f"WHERE size(_ids) >= 2 AND pa < pb AND NOT array_min(_cap)"
         )
-    force = os.environ.get("MLFS_FORCE_SHUFFLE_HASH") == "1"
-    join_hint = (
-        "/*+ SHUFFLE_HASH(b) */ " if (force and max_bucket_size) else ""
-    )
     # broadcast the rep signature frame into both attach joins when the
     # corpus is small enough to bound the built relation (see
     # _attach_broadcast): kills the mid-attach exchange that re-shuffled
     # pair rows already carrying sa's signatures + id arrays.
-    if force:
-        est_hint = "/*+ SHUFFLE_HASH(sa, sb) */ "
-    elif _attach_broadcast(signatures):
-        est_hint = "/*+ BROADCAST(sa, sb) */ "
-    else:
-        est_hint = ""
+    est_hint = "/*+ BROADCAST(sa, sb) */ " if _attach_broadcast(signatures) else ""
     if max_bucket_size is None:
         terms = [
             f"IF(a.band > {j}, a._bks[{j}] != b._bks[{j}], TRUE)"
@@ -377,7 +352,7 @@ def _minhash_lsh_candidates_grouped(
         ]
     first_band = " AND ".join(terms) if terms else "TRUE"
     rep_pairs = (
-        f"SELECT {join_hint}a.rk AS rk_a, b.rk AS rk_b "
+        f"SELECT a.rk AS rk_a, b.rk AS rk_b "
         f"FROM ({bands_sql}) a JOIN ({bands_sql}) b "
         f"ON a.band = b.band AND a.bucket = b.bucket AND a.rk < b.rk "
         f"WHERE {first_band}"
@@ -416,7 +391,7 @@ def minhash_lsh_candidates(
     agreement.
 
     ``signatures`` feeds all four join sides. Sharing is by AQE stage reuse,
-    not caching (r11): all four subtrees are canonically identical (the
+    not caching: all four subtrees are canonically identical (the
     banded subquery filters ``id IS NOT NULL`` precisely so its scan matches
     the null-filter the attach joins push down — null ids can never form a
     pair, so the filter is free), and AQE materializes the signature
@@ -439,7 +414,7 @@ def minhash_lsh_candidates(
     boilerplate buckets — the recall caveat is that pairs whose *every*
     matching band lands in a capped bucket are lost (see ``_cap_buckets``).
 
-    Plan-floor note (r9): the whole candidate query after ``signatures`` is
+    Plan-floor note: the whole candidate query after ``signatures`` is
     built as TWO ``spark.sql`` strings (banded rows; self-join + pair dedup
     + est_jaccard attach) with the DataFrames passed as SQL parameters —
     identical analyzed plan and caching points to the old node-by-node
@@ -450,12 +425,8 @@ def minhash_lsh_candidates(
     the build side is skew-free): AQE picks broadcast/shuffled-hash/
     sort-merge from ACTUAL shuffle sizes
     (``maxShuffledHashJoinLocalMapThreshold`` in ``utils.get_spark``);
-    uncapped mode never forces a hash join, so AQE skew splitting still
-    protects degenerate boilerplate buckets. ``MLFS_FORCE_SHUFFLE_HASH=1``
-    statically pins the capped self-join and the signature attach joins for
-    A/Bs (see ``_shuffle_hash``)."""
-    import os
-
+    no join strategy is pinned statically, so AQE skew splitting still
+    protects degenerate boilerplate buckets."""
     if cache:
         signatures = signatures.cache()
     if group_identical is None:
@@ -525,7 +496,7 @@ def minhash_lsh_candidates(
             f"SELECT {iq}, _bks, band, bucket, _cap FROM ({capped}) "
             f"WHERE _bn >= 2 AND _bn <= {max_bucket_size}"
         )
-    # NOT cached (r9 A/B): the self-join's two sides recompute the banding
+    # NOT cached: the self-join's two sides recompute the banding
     # from the CACHED signatures, which measures equal-or-faster than
     # caching the exploded band rows at sf0.1 (1.13 vs 1.23 s min) and
     # sf10 (21.4 vs 21.9 s min) — and repeated calls with the cache
@@ -533,20 +504,11 @@ def minhash_lsh_candidates(
     # 21–25 s uncached). One fewer materialization job per call.
     # sql_with_frames, NOT spark.sql(..., sig=...): the stock parameterized
     # form drops its temp views through the CacheManager and silently
-    # UNPERSISTS the signatures cache (see utils.sql_with_frames) — measured
-    # r11: the cached pipeline was recomputed on all four join sides.
+    # UNPERSISTS the signatures cache (see utils.sql_with_frames), so a
+    # cache=True caller would recompute the pipeline on all four join sides.
     bands = sql_with_frames(spark, bands_sql, sig=signatures)
-    force = os.environ.get("MLFS_FORCE_SHUFFLE_HASH") == "1"
-    join_hint = (
-        "/*+ SHUFFLE_HASH(b) */ " if (force and max_bucket_size) else ""
-    )
     # same gated broadcast as the grouped path (see _attach_broadcast)
-    if force:
-        est_hint = "/*+ SHUFFLE_HASH(sa, sb) */ "
-    elif _attach_broadcast(signatures):
-        est_hint = "/*+ BROADCAST(sa, sb) */ "
-    else:
-        est_hint = ""
+    est_hint = "/*+ BROADCAST(sa, sb) */ " if _attach_broadcast(signatures) else ""
     if max_bucket_size is None:
         # first-matching-band dedup (same trick as simhash_candidates): a
         # pair joins once per agreeing band, and both bucket vectors ride the
@@ -587,7 +549,7 @@ def minhash_lsh_candidates(
         f"(x, y) -> CAST(x = y AS INT)), 0, (acc, x) -> acc + x) "
         f"/ size(sa.signature), 6) AS est_jaccard "
         f"FROM ("
-        f"SELECT {join_hint}a.{iq} AS id_a, b.{iq} AS id_b "
+        f"SELECT a.{iq} AS id_a, b.{iq} AS id_b "
         f"FROM {{bands}} a JOIN {{bands}} b "
         f"ON a.band = b.band AND a.bucket = b.bucket AND a.{iq} < b.{iq} "
         f"WHERE {first_band}"
@@ -665,8 +627,8 @@ def jaccard_verify_pairs(
 
     ``ngram_jaccard_pairs`` computes the exact all-pairs set via a shingle
     self-join — quadratic in hot shingles and (by design) the recall
-    ORACLE, not the production path: the r10 sf10 STRICT sweep confirmed
-    it is DNF-class at 500k docs on both engines. This operator bounds
+    ORACLE, not the production path: at sf10 (500k docs) it does not
+    finish on either engine. This operator bounds
     the exact work by the candidate set instead: semi-join each side's
     shingles onto the pairs (only candidate docs' shingles survive the
     scan), join a-side to b-side per pair on shingle equality, and
@@ -680,7 +642,7 @@ def jaccard_verify_pairs(
     Compose: ``minhash_lsh_candidates(sig) |> jaccard_verify_pairs(docs,
     ...)`` — banding generates, this verifies, both shuffles bounded.
 
-    Robustness (r11): input pairs are ``distinct()``-ed first — a duplicated
+    Robustness: input pairs are ``distinct()``-ed first — a duplicated
     (id_a, id_b) row would otherwise multiply n_inter through the
     join-then-groupBy and silently report jaccard > truth (even > 1.0);
     minhash_lsh_candidates happens to emit distinct pairs but external
@@ -770,7 +732,7 @@ def simhash(
     reps; 2.47 vs 2.55 in a 5-rep run). Identical fingerprints verified
     across all variants (exceptAll empty both directions at sf1).
 
-    Plan-floor note (r9): the whole query — tokenize, lane sums, and the
+    Plan-floor note: the whole query — tokenize, lane sums, and the
     63-term fingerprint reassembly — is ONE ``spark.sql`` string with the
     input DataFrame passed as a SQL parameter; identical analyzed plan and
     results to the node-by-node Column construction, but the py4j round
@@ -810,6 +772,21 @@ def simhash(
     return sql_with_frames(spark, sql, df=df)
 
 
+# Largest candidate graph, in edges, that connected_components finishes on
+# the driver. Measured with tools/measure_cc_bound.py (local[3], 3g heap,
+# 4-vCPU VM): at 1M edges the driver path took 2.4-2.8 s against 11.5-13.5 s
+# distributed, and raised the Python driver's peak RSS by 142 MB for bigint
+# ids and 366 MB for 16-character string ids; at 2M string-id edges that
+# grows to 848 MB. The bound keeps the driver's extra Python memory under ~0.4 GB;
+# larger graphs stay distributed.
+_CC_DRIVER_MAX_EDGES = 1_000_000
+
+# id types whose Python ordering equals Spark's: integers compare
+# numerically, and UTF8_BINARY strings compare by UTF-8 bytes, which is code
+# point order, the order Python uses for str
+_CC_DRIVER_ID_TYPES = (ByteType(), ShortType(), IntegerType(), LongType(), StringType())
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -822,6 +799,94 @@ def connected_components(
     pairs alone can't answer "which docs do I keep": A~B and B~C must
     collapse to one cluster {A,B,C} with one canonical survivor.
 
+    The edge set is materialized once (``localCheckpoint``) and counted in
+    the same job. A graph of at most ``_CC_DRIVER_MAX_EDGES`` (1,000,000)
+    edges is then collected and finished on the driver by a numpy
+    union-find over sorted node codes and returned as one small local
+    frame, so it costs no Spark job per round. The driver path is
+    taken only when both id columns have the same integral or string type
+    and no id is null: only then does Python's ordering equal Spark's, so
+    the minimum found on the driver is the minimum Spark would pick. Every
+    other graph runs the distributed label propagation
+    (:func:`_connected_components_spark`, capped at ``max_iter`` rounds)
+    over the materialized edges, so the upstream candidate pipeline is
+    evaluated once on either path. Both paths return the same rows with the
+    same schema ``(node_id, cluster_id, cluster_size)``.
+    """
+    edges = edges.select(
+        F.col(src).alias("_a"), F.col(dst).alias("_b")
+    ).localCheckpoint(eager=False)
+    # one job, no shuffle: computing the plan's RDD materializes the
+    # checkpoint and counts it (DataFrame.count would add an aggregation
+    # stage), so nothing is collected before the size is known
+    n_edges = edges._jdf.queryExecution().toRdd().count()
+    id_type = edges.schema["_a"].dataType
+    if (
+        n_edges <= _CC_DRIVER_MAX_EDGES
+        and id_type == edges.schema["_b"].dataType
+        and id_type in _CC_DRIVER_ID_TYPES
+    ):
+        local = edges.toPandas()
+        if not local.isna().to_numpy().any():
+            return _connected_components_local(edges.sparkSession, local, id_type)
+    return _connected_components_spark(edges, "_a", "_b", max_iter)
+
+
+def _connected_components_local(spark, local, id_type) -> DataFrame:
+    """Components of the collected ``(_a, _b)`` edges, computed in numpy.
+
+    Node ids are factorized with ``sort=True``, so code order is id order
+    and a component's smallest code is its smallest id. Each round hooks
+    every root that has an edge to a smaller root onto the smallest such
+    root, then jumps pointers until every node points at its root; the loop
+    ends when no edge joins two roots. ``parent[x] <= x`` throughout, so the
+    forest has no cycles and every root is the minimum of its tree."""
+    import numpy as np
+    import pandas as pd
+
+    n = len(local)
+    codes, nodes = pd.factorize(
+        np.concatenate([local["_a"].to_numpy(), local["_b"].to_numpy()]), sort=True
+    )
+    u, v = codes[:n], codes[n:]
+    parent = np.arange(len(nodes))
+    while True:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        if not cross.any():
+            break
+        np.minimum.at(parent, np.maximum(ru, rv)[cross], np.minimum(ru, rv)[cross])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    size = np.bincount(parent, minlength=len(nodes))
+    schema = StructType(
+        [
+            StructField("node_id", id_type),
+            StructField("cluster_id", id_type),
+            StructField("cluster_size", LongType(), nullable=False),
+        ]
+    )
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "node_id": nodes,
+                "cluster_id": nodes[parent],
+                "cluster_size": size[parent].astype("int64"),
+            }
+        ),
+        schema,
+    )
+
+
+def _connected_components_spark(
+    edges: DataFrame, src: str, dst: str, max_iter: int
+) -> DataFrame:
+    """Distributed connected components for graphs too large (or with ids
+    of a type) the driver path does not take.
+
     Algorithm: min-neighbor hooking + graph CONTRACTION, then min-label
     propagation with pointer jumping on the contracted graph (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14 — the
@@ -832,34 +897,30 @@ def connected_components(
     clone pairs with every other) contributes k·(k−1)/2 edges to exactly
     ONE pass and ZERO edges to the iterative loop. The loop then runs on
     the contracted remainder — inter-star chains only, typically a small
-    fraction of the input — with the same two-shuffle rounds as before:
-    (a) pull min label across contracted edges, (b) pointer-jump
-    label(x) <- label(label(x)), frames localCheckpoint()ed per round to
-    truncate iterative lineage. The per-round convergence test is one
-    count() over the changed rows — an inherent driver action of any
-    fixpoint loop, not a collect of data.
+    fraction of the input — with two-shuffle rounds: (a) pull min label
+    across contracted edges, (b) pointer-jump label(x) <- label(label(x)),
+    frames localCheckpoint()ed per round to truncate iterative lineage.
+    The per-round convergence test is one count() over the changed rows —
+    an inherent driver action of any fixpoint loop, not a collect of data.
 
     At 100 TB: the full edge set is touched a bounded number of times
     (symmetrize, hook, contract — map-side-combining aggregations all);
     every loop round shuffles only the contracted graph, which clone-heavy
     corpora collapse to near-nothing, so the cost of k-fold replication is
     the k²-fold candidate set itself, paid O(1) times, not per round.
+    Every intermediate is materialized by ``localCheckpoint`` alone, so the
+    path registers nothing with the session's cache manager.
     """
-    # symmetrize in ONE pass over the edge generator (a union of two selects
-    # would evaluate the upstream candidate pipeline — often the most
-    # expensive stage of a dedup job — twice before the cache kicks in)
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("_u"), F.col(dst).alias("_v")),
-                    F.struct(F.col(dst).alias("_u"), F.col(src).alias("_v")),
-                )
-            ).alias("_e")
-        )
-        .select(F.col("_e._u").alias("_u"), F.col("_e._v").alias("_v"))
-        .cache()  # hooking + contraction both read it; never recompute
-    )
+    # symmetrize in ONE pass over the edges (a union of two selects would
+    # read them twice per consumer); hooking and contraction both read this
+    sym = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("_u"), F.col(dst).alias("_v")),
+                F.struct(F.col(dst).alias("_u"), F.col(src).alias("_v")),
+            )
+        ).alias("_e")
+    ).select(F.col("_e._u").alias("_u"), F.col("_e._v").alias("_v"))
     # hook: label(x) = min(x, min over direct neighbors). Forms a forest
     # (every non-root label strictly decreases), each tree a star after
     # this single pass over the edges.
@@ -867,9 +928,8 @@ def connected_components(
         sym.groupBy("_u")
         .agg(F.min("_v").alias("_m"))
         .select(F.col("_u").alias("_id"), F.least("_u", "_m").alias("_lbl"))
-        .cache()
+        .localCheckpoint(eager=True)
     )
-    hooked = hooked.localCheckpoint(eager=True)
     # contract: rewrite every edge to (label(u), label(v)), drop self-loops
     # (intra-star edges — ALL of a clique's edges), dedup. Partial
     # aggregation collapses the clique bulk map-side before the shuffle.
@@ -885,12 +945,8 @@ def connected_components(
         .select("_lu", "_lv")
         .filter(F.col("_lu") != F.col("_lv"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    # materialize the contracted edge set BEFORE releasing sym: an eager
-    # unpersist here would force the first action on `contracted` to re-run
-    # the whole upstream candidate-pair pipeline (the dominant job cost)
-    contracted = contracted.localCheckpoint(eager=True)
-    sym.unpersist()
     csym = contracted.select(
         F.col("_lu").alias("_u"), F.col("_lv").alias("_v")
     )  # already symmetric: sym contained both directions of every edge
@@ -898,9 +954,8 @@ def connected_components(
         csym.groupBy("_u")
         .agg(F.min("_v").alias("_m"))
         .select(F.col("_u").alias("_id"), F.least("_u", "_m").alias("_lbl"))
-        .cache()
+        .localCheckpoint(eager=True)
     )
-    labels = labels.localCheckpoint(eager=True)
     for _ in range(max_iter):
         # (a) pull min label across contracted edges
         nbr = (
@@ -919,19 +974,16 @@ def connected_components(
         new_labels = (
             pulled.join(jump, on="_lbl", how="left")
             .select("_id", F.least("_lbl", "_jl").alias("_lbl"))
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
         changed = (
             new_labels.join(labels.withColumnRenamed("_lbl", "_old"), on="_id")
             .filter(F.col("_lbl") != F.col("_old"))
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
-    contracted.unpersist()
     # compose back: node -> hooked label -> its contracted-component min
     # (roots with no surviving contracted edges keep their hooked label)
     final = (
@@ -972,15 +1024,16 @@ _INPUT_BYTES_CACHE: dict = {}
 
 
 def _attach_broadcast(df: DataFrame) -> bool:
-    """r12 gate for broadcasting the per-doc signature/fingerprint frame
-    into the pair-attach joins (guide §3.1). The attach used to run as two
-    chained shuffle joins, so the FIRST join's output — candidate pairs
-    already carrying one side's signature payload — was re-shuffled by the
-    second join key: at the 100x bench corpus that middle exchange alone
-    was ~1.06 GB of the query's 1.72 GB total shuffle. Broadcasting both
-    attach sides removes it (measured, min-of-3 interleaved: total task
-    time 254 -> 193 s, executor CPU 230 -> 169 s, shuffle write
-    1718 -> 654 MB, wall 10.9 -> 8.5 s; bit_xor row-hash identical).
+    """Whether to statically broadcast ONE per-doc signature/fingerprint
+    frame into a pair-attach join; callers ask once per frame, so a frame
+    is broadcast only on its own size. As two chained shuffle joins, the
+    FIRST join's output — candidate pairs already carrying one side's
+    signature payload — is re-shuffled by the second join key: at the 100x
+    bench corpus that middle exchange alone was ~1.06 GB of the query's
+    1.72 GB total shuffle. Broadcasting the attach sides removes it
+    (measured, min-of-3 interleaved: total task time 254 -> 193 s,
+    executor CPU 230 -> 169 s, shuffle write 1718 -> 654 MB, wall
+    10.9 -> 8.5 s; bit_xor row-hash identical).
     Gated BOTH ways on the same leaf-stats probe as ``group_identical``:
     above ``maxInputBytes`` (default 2 GiB of input parquet — the per-doc
     signature relation that builds from it is ~100-200 MB, far under
@@ -1034,8 +1087,6 @@ def _simhash_candidates_grouped(
     array is a memory hazard implies a quadratic OUTPUT (m²/2 pairs) that
     is infeasible anyway — run ``exact_duplicates`` first, as
     ``dedup_corpus`` does, to collapse byte-identical mass."""
-    import os
-
     spark = fps.sparkSession
     iq = f"`{id_col}`"
     chunk_arr = "array(" + ", ".join(
@@ -1102,10 +1153,6 @@ def _simhash_candidates_grouped(
             f"WHERE size(_ids) >= 2 AND pa < pb "
             f"AND NOT (_cap[0] AND _cap[1] AND _cap[2] AND _cap[3])"
         )
-    force = os.environ.get("MLFS_FORCE_SHUFFLE_HASH") == "1"
-    join_hint = (
-        "/*+ SHUFFLE_HASH(b) */ " if (force and max_bucket_size) else ""
-    )
     # first-matching-band dedup at rep level (identical reasoning to the
     # row-space plan, with simhash ordering standing in for id ordering:
     # each unordered REP pair joins once per agreeing band and exactly one
@@ -1123,7 +1170,7 @@ def _simhash_candidates_grouped(
         terms.append(f"IF(a.chunk_idx > {j}, {claim_free}, TRUE)")
     no_earlier = " AND ".join(terms)
     rep_pairs = (
-        f"SELECT {join_hint}a._ids AS ids_a, b._ids AS ids_b, "
+        f"SELECT a._ids AS ids_a, b._ids AS ids_b, "
         f"bit_count(a.simhash ^ b.simhash) AS hamming "
         f"FROM ({chunks_sql}) a JOIN ({chunks_sql}) b "
         f"ON a.chunk_idx = b.chunk_idx AND a.chunk = b.chunk "
@@ -1152,7 +1199,7 @@ def simhash_candidates(
     (pigeonhole: hamming ≤ 3 ⇒ at least one chunk equal), join per chunk,
     verify exact hamming distance.
 
-    ``group_identical`` (r11): run the banded self-join over DISTINCT
+    ``group_identical``: run the banded self-join over DISTINCT
     fingerprints and expand rep pairs back to id pairs — output multiset
     identical (pinned by
     ``test_simhash_candidates_grouped_matches_rowspace``), join mass and
@@ -1175,14 +1222,12 @@ def simhash_candidates(
     ``cache``: both self-join sides read the fingerprints; the default
     relies on AQE stage reuse — the two sides' chunk exchanges are
     canonically identical, so the fingerprint pipeline is materialized once
-    and shared (measured r11 at sf0.1: 1.05 s / 5 jobs vs 2.39 s / 8 jobs
+    and shared (measured at sf0.1: 1.05 s / 5 jobs vs 2.39 s / 8 jobs
     with ``cache=True``, whose materialization job + columnar write buys
     nothing stage reuse doesn't). Pass ``cache=True`` only when the same
     ``fps`` frame feeds later queries in a session pipeline; the cache
     lives until evicted (LRU), so unpersist the frame you passed in after
     your terminal action."""
-    import os
-
     if cache:
         fps = fps.cache()
     if group_identical is None:
@@ -1233,13 +1278,8 @@ def simhash_candidates(
         )
     # same reasoning as the minhash banded join: capped buckets bound skew,
     # so a runtime hash join can skip sorting both exploded chunk sides
-    # (AQE's SMJ->SHJ threshold decides; the SHUFFLE_HASH hint only pins it
-    # under MLFS_FORCE_SHUFFLE_HASH=1); uncapped keeps AQE skew-splitting
-    # free to act on degenerate buckets.
-    force = os.environ.get("MLFS_FORCE_SHUFFLE_HASH") == "1"
-    join_hint = (
-        "/*+ SHUFFLE_HASH(b) */ " if (force and max_bucket_size) else ""
-    )
+    # (AQE's SMJ->SHJ threshold decides, nothing is pinned statically);
+    # uncapped keeps AQE skew-splitting free to act on degenerate buckets.
     # first-matching-band dedup: both fingerprints ride the join row, so
     # "is this the FIRST band where the pair's chunks agree" is a plain
     # expression — each pair survives from exactly one band and the
@@ -1262,7 +1302,7 @@ def simhash_candidates(
     no_earlier = " AND ".join(terms)
     sql = (
         f"SELECT id_a, id_b, hamming FROM ("
-        f"SELECT {join_hint}a.{iq} AS id_a, b.{iq} AS id_b, "
+        f"SELECT a.{iq} AS id_a, b.{iq} AS id_b, "
         f"bit_count(a.simhash ^ b.simhash) AS hamming "
         f"FROM ({chunks_sql}) a JOIN ({chunks_sql}) b "
         f"ON a.chunk_idx = b.chunk_idx AND a.chunk = b.chunk "
@@ -1484,16 +1524,15 @@ def repeated_spans(
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
     w = int(window)
-    # one row per window start: hash of the w-token window. r11: built by a
+    # one row per window start: hash of the w-token window, built by a
     # lambda-free slice/arrays_zip projection over the token array — ZERO
-    # shuffles (the earlier lead-window form paid an Exchange+Sort of every
-    # corpus token; the round-8 HOF dead end was the interpreted
-    # transform-LAMBDA per window, which this is not — slice/zip/explode/
-    # concat/xxhash64 are all codegen'd). Slices are sized to the valid
-    # window count, so posexplode's index IS the window start position over
-    # the length-filtered token sequence, matching the old filtered-lead
-    # rows exactly. The scan is spread first (utils.spread_scan) so the
-    # window hashing isn't pinned to the parquet row-group count.
+    # shuffles (a lead-window form pays an Exchange+Sort of every corpus
+    # token) and no interpreted transform-LAMBDA per window: slice/zip/
+    # explode/concat/xxhash64 are all codegen'd. Slices are sized to the
+    # valid window count, so posexplode's index IS the window start
+    # position over the length-filtered token sequence. The scan is spread
+    # first (utils.spread_scan) so the window hashing isn't pinned to the
+    # parquet row-group count.
     df = spread_scan(df.select(F.col(id_col), F.col(text_col)))
     base = df.select(
         F.col(id_col),
@@ -1769,23 +1808,16 @@ def dedup_paragraphs(
     # a HashAggregate: (1) min doc per hash (+ count, to prune unique
     # paragraphs from the join entirely), (2) min pos within that doc.
     #
-    # r12 (guide §2.4, remove shuffles/scans outright): winner selection is
-    # now TWO CHAINED aggregations over ONE scan — per (hash, doc) first
-    # (min pos + count; map-side combine collapses within-doc repeats
-    # before the shuffle), then per hash with ``min_by(_dpos, _did)``
-    # picking the min-doc's first position without ever revisiting the
-    # occurrence rows. Before, the min-pos stage re-scanned and re-exploded
-    # the whole corpus as the probe side of a broadcast join against the
-    # repeated-hash set — a full extra pass, and at a scale where that set
-    # outgrows a broadcast the planner would have shuffled the occurrence
-    # rows anyway ON TOP of the re-scan. The second aggregation's input is
-    # the per-(hash, doc) combined rows — strictly no more than the old
-    # g1 shuffle — and ``min_by`` over the unique-per-group ``_did`` is
-    # deterministic and stays a HashAggregate (primitive buffer; pinned by
-    # test_dedup_paragraphs_aggregates_are_hash_not_sort). Executed-plan
-    # delta on the merged dedup_exact slot: 5 documents scans -> 4,
-    # 11 -> 9 jobs (plans/r12/dedup_exact_entry_before/after.txt);
-    # multiset-identical output.
+    # Winner selection is TWO CHAINED aggregations over ONE scan — per
+    # (hash, doc) first (min pos + count; map-side combine collapses
+    # within-doc repeats before the shuffle), then per hash with
+    # ``min_by(_dpos, _did)`` picking the min-doc's first position without
+    # revisiting the occurrence rows, so the corpus is never re-scanned or
+    # re-exploded to find the winning position. The second aggregation's
+    # input is the per-(hash, doc) combined rows, and ``min_by`` over the
+    # unique-per-group ``_did`` is deterministic and stays a HashAggregate
+    # (primitive buffer; pinned by
+    # test_dedup_paragraphs_aggregates_are_hash_not_sort).
     narrow = hashed.select("_did", "_pos", "_h1", "_h2").filter(
         F.col("_h1").isNotNull()
     )

@@ -1026,8 +1026,9 @@ def semantic_dedup(
     ``count()`` job). Pass ``n_lists`` explicitly to pin the list count
     and skip the count job entirely (``target_list_size`` is then
     ignored).
-    Pair edges collapse to clusters via distributed min-label propagation
-    (:func:`~mlforecast_spark.operators.dedup.connected_components`), so
+    Pair edges collapse to clusters via
+    :func:`~mlforecast_spark.operators.dedup.connected_components` (on the
+    driver for a small edge set, distributed label propagation otherwise), so
     transitive near-dups (A~B~C with cos(A,C) < 1-eps) still dedup to ONE
     survivor, matching the paper's per-group extraction. ``train_fraction``
     passes through to the k-means (sampled centroid training)."""

@@ -284,6 +284,49 @@ def future_grid(df, freq: Freq, h: int, id_col: str = "unique_id", time_col: str
     )
 
 
+_CGROUP_MEMORY_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def _memory_limit_bytes(cgroup_files=_CGROUP_MEMORY_LIMIT_FILES) -> int | None:
+    """The smaller of physical RAM and the process's cgroup memory limit;
+    None if neither can be read. An unlimited cgroup reads as ``max`` or a
+    huge number and so never wins the minimum."""
+    import os
+
+    limits = []
+    try:
+        limits.append(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+    except (AttributeError, OSError, ValueError):
+        pass
+    for path in cgroup_files:
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+    limits = [b for b in limits if b > 0]
+    return min(limits) if limits else None
+
+
+def _default_driver_memory(limit_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: 60% of the memory available to the
+    process (``limit_bytes``, read from the machine when None), capped at
+    48g and at least 1g, in whole MiB. The remaining 40% is left to the
+    JVM's off-heap use and the Python driver and workers. 8g when the
+    memory cannot be read."""
+    if limit_bytes is None:
+        limit_bytes = _memory_limit_bytes()
+    if limit_bytes is None:
+        return "8g"
+    mib = int(limit_bytes * 0.6) >> 20
+    return f"{max(1024, min(48 << 10, mib))}m"
+
+
 def get_spark(app_name: str = "mlforecast-spark", cpus: int | None = None) -> SparkSession:
     """Local SparkSession tuned for this engine (tests / bench).
 
@@ -300,10 +343,9 @@ def get_spark(app_name: str = "mlforecast-spark", cpus: int | None = None) -> Sp
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # let AQE swap sort-merge for shuffled-hash when every post-shuffle
         # partition of the build side fits this threshold (runtime decision
-        # from actual sizes — replaces the static SHUFFLE_HASH hints on the
-        # banded dedup joins, which won at sf10 but blocked AQE's
-        # broadcast conversion at sf0.1; see operators/dedup.py:_shuffle_hash
-        # and the round-7 A/B in BASELINE.md). 64m matches the advisory
+        # from actual sizes, used by the banded dedup joins instead of static
+        # SHUFFLE_HASH hints, which win at sf10 but block AQE's broadcast
+        # conversion at sf0.1; see BASELINE.md). 64m matches the advisory
         # partition size; per-partition hash builds of that size are safe on
         # any multi-GB executor.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
@@ -312,8 +354,13 @@ def get_spark(app_name: str = "mlforecast-spark", cpus: int | None = None) -> Sp
         # local mode: the driver JVM IS the executor; 32 task threads on an
         # 8g heap spent whole benches in GC (measured at sf1: simhash 41s ->
         # 19.6s, IVF probe 40s -> 17.1s after raising the cap). -Xmx is a
-        # ceiling, not an allocation, so a big default is free for tests.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # ceiling, not an allocation, but the JVM grows its heap toward it
+        # instead of collecting, so a ceiling above the machine's memory gets
+        # the process killed; the default is sized from the memory present.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # read TIMESTAMP(NANOS) parquet columns as long (see load_events)

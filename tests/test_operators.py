@@ -552,35 +552,43 @@ def test_driver_collect_guard(spark):
 # duplicate-cluster resolution (connected components)
 # ---------------------------------------------------------------------------
 
-def test_connected_components_basic(spark):
-    from mlforecast_spark.operators.dedup import connected_components
+def _cc_paths():
+    """Both connected-components paths: the public entry, which finishes
+    every graph these tests build on the driver, and the distributed
+    label-propagation path it falls back to."""
+    from mlforecast_spark.operators import dedup
 
+    def spark_path(edges, src="id_a", dst="id_b"):
+        return dedup._connected_components_spark(edges, src, dst, max_iter=25)
+
+    return [dedup.connected_components, spark_path]
+
+
+def test_connected_components_basic(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (9, 9)], "id_a long, id_b long"
     )
-    out = connected_components(edges).toPandas().set_index("node_id")
-    assert out.loc[1, "cluster_id"] == 1 and out.loc[3, "cluster_id"] == 1
-    assert out.loc[2, "cluster_size"] == 3
-    assert out.loc[5, "cluster_id"] == 5 and out.loc[6, "cluster_size"] == 2
-    assert out.loc[9, "cluster_id"] == 9 and out.loc[9, "cluster_size"] == 1
+    for cc in _cc_paths():
+        out = cc(edges).toPandas().set_index("node_id")
+        assert out.loc[1, "cluster_id"] == 1 and out.loc[3, "cluster_id"] == 1
+        assert out.loc[2, "cluster_size"] == 3
+        assert out.loc[5, "cluster_id"] == 5 and out.loc[6, "cluster_size"] == 2
+        assert out.loc[9, "cluster_id"] == 9 and out.loc[9, "cluster_size"] == 1
 
 
 def test_connected_components_long_chain_and_strings(spark):
-    from mlforecast_spark.operators.dedup import connected_components
-
     # a 40-node path exercises pointer jumping (pure propagation would need
-    # 40 rounds; the loop is capped at 25)
+    # 40 rounds; the distributed loop is capped at 25)
     chain = [(f"d{i:03d}", f"d{i + 1:03d}") for i in range(40)]
     edges = spark.createDataFrame(chain, "id_a string, id_b string")
-    out = connected_components(edges).toPandas()
-    assert set(out["cluster_id"]) == {"d000"}
-    assert (out["cluster_size"] == 41).all()
+    for cc in _cc_paths():
+        out = cc(edges).toPandas()
+        assert set(out["cluster_id"]) == {"d000"}
+        assert (out["cluster_size"] == 41).all()
 
 
 def test_connected_components_vs_union_find(spark):
     import random
-
-    from mlforecast_spark.operators.dedup import connected_components
 
     rnd = random.Random(11)
     nodes = list(range(120))
@@ -604,15 +612,124 @@ def test_connected_components_vs_union_find(spark):
         expected.setdefault(root, set()).add(n)
     want = {n: min(members) for members in expected.values() for n in members}
 
-    out = (
-        connected_components(
-            spark.createDataFrame(edges, "id_a long, id_b long")
-        )
-        .toPandas()
-        .set_index("node_id")["cluster_id"]
-        .to_dict()
+    frame = spark.createDataFrame(edges, "id_a long, id_b long")
+    for cc in _cc_paths():
+        out = cc(frame).toPandas().set_index("node_id")["cluster_id"].to_dict()
+        assert out == want
+
+
+def _spy_spark_path(monkeypatch):
+    """Record every call the public entry makes to the distributed path."""
+    from mlforecast_spark.operators import dedup
+
+    calls = []
+    real = dedup._connected_components_spark
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_connected_components_spark", spy)
+    return calls
+
+
+def _rows(df):
+    return sorted(
+        (tuple(r) for r in df.collect()), key=lambda r: tuple(map(str, r))
     )
-    assert out == want
+
+
+_CC_EDGES = [(5, 3), (3, 9), (9, 9), (12, 7), (3, 5), (100, 101)]
+
+
+@pytest.mark.parametrize(
+    "schema,edges,on_driver",
+    [
+        ("id_a tinyint, id_b tinyint", _CC_EDGES, True),
+        ("id_a smallint, id_b smallint", _CC_EDGES, True),
+        ("id_a int, id_b int", _CC_EDGES, True),
+        ("id_a bigint, id_b bigint", _CC_EDGES, True),
+        ("id_a bigint, id_b bigint", [], True),
+        # code point order: "100" < "12" < "3"
+        ("id_a string, id_b string", [(str(a), str(b)) for a, b in _CC_EDGES], True),
+        # Python orders only integral and string ids the way Spark does
+        ("id_a double, id_b double", [(a / 2, b / 2) for a, b in _CC_EDGES], False),
+        ("id_a int, id_b bigint", _CC_EDGES, False),
+        # nor does it order a null id
+        ("id_a bigint, id_b bigint", _CC_EDGES + [(7, None)], False),
+    ],
+)
+def test_connected_components_paths_agree(spark, monkeypatch, schema, edges, on_driver):
+    """The driver path takes integral and string ids only and returns the
+    distributed path's rows under its schema; every other id type, and any
+    null id, runs the distributed path."""
+    from mlforecast_spark.operators import dedup
+
+    frame = spark.createDataFrame(edges, schema)
+    distributed = dedup._connected_components_spark(frame, "id_a", "id_b", 25)
+    calls = _spy_spark_path(monkeypatch)
+    out = dedup.connected_components(frame)
+    assert len(calls) == (0 if on_driver else 1)
+    assert out.schema == distributed.schema
+    assert _rows(out) == _rows(distributed)
+
+
+def test_connected_components_edge_bound_routes_to_spark_path(spark, monkeypatch):
+    """Up to ``_CC_DRIVER_MAX_EDGES`` edges are collected and finish on the
+    driver; one more runs the distributed path without collecting any edge.
+    Same rows and schema either way."""
+    from mlforecast_spark.operators import dedup
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (8, 9), (9, 5)], "id_a long, id_b long"
+    ).repartition(4)
+    assert edges.rdd.getNumPartitions() == 4
+    frame_type = type(edges)
+    collects = []
+    real_to_pandas = frame_type.toPandas
+
+    def to_pandas(self):
+        collects.append(self)
+        return real_to_pandas(self)
+
+    monkeypatch.setattr(frame_type, "toPandas", to_pandas)
+    calls = _spy_spark_path(monkeypatch)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 5)
+    local = dedup.connected_components(edges)
+    assert calls == [] and len(collects) == 1
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 4)
+    distributed = dedup.connected_components(edges)
+    assert len(calls) == 1 and len(collects) == 1
+    monkeypatch.undo()
+    assert local.schema == distributed.schema
+    assert _rows(local) == _rows(distributed) == [
+        (1, 1, 3), (2, 1, 3), (3, 1, 3),
+        (5, 5, 4), (6, 5, 4), (8, 5, 4), (9, 5, 4),
+    ]
+
+
+def test_connected_components_spark_path_leaves_cache_empty(
+    spark, monkeypatch, panel, panel_static
+):
+    """The distributed path materializes with ``localCheckpoint`` only: a
+    ``cache()`` in front of a checkpoint registers a plan whose handle is
+    dropped, so no later ``unpersist`` could free it."""
+    from mlforecast_spark.operators import dedup
+
+    chain = [(i, i + 1) for i in range(12)] + [(40, 41)]
+    edges = spark.createDataFrame(chain, "id_a long, id_b long")
+    calls = _spy_spark_path(monkeypatch)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    spark.catalog.clearCache()
+    try:
+        out = dedup.connected_components(edges)
+        assert len(calls) == 1
+        assert out.filter(F.col("cluster_id") == 0).count() == 13
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        # the clear also dropped the session fixtures' caches
+        panel.cache()
+        panel_static.cache()
 
 
 # ---------------------------------------------------------------------------

@@ -590,7 +590,7 @@ def test_panel_fat_group_gate(spark, tmp_path):
 
 
 def test_minhash_attach_broadcast_gate(spark):
-    """The r12 attach-broadcast gate: tiny corpora keep the AQE-planned
+    """The attach-broadcast gate: tiny corpora keep the AQE-planned
     joins (no static broadcast hint — the hint only adds a broadcast-build
     job there), while corpora past minBytes get the static BROADCAST
     attach that removes the mid-attach exchange; values identical."""
@@ -626,3 +626,87 @@ def test_minhash_attach_broadcast_gate(spark):
             spark.conf.unset("spark.mlforecast.attachBroadcast.minBytes")
         else:
             spark.conf.set("spark.mlforecast.attachBroadcast.minBytes", old)
+
+
+def test_probe_attach_broadcasts_only_the_side_past_the_gate(spark, monkeypatch):
+    """``minhash_probe_candidates`` attaches probe and index signatures in
+    two joins; each side is broadcast only when it alone passes
+    ``_attach_broadcast``. A probe inside the gate must not drag the index
+    into a broadcast; values do not depend on the hints."""
+    from mlforecast_spark.operators import dedup
+
+    sig = dedup.minhash_signatures(
+        dedup.shingle_df(_minhash_docs(spark), n=3, distinct=False)
+    )
+    probe = sig.filter(F.col("doc_id") % 7 == 0)
+
+    def canon(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    monkeypatch.setattr(dedup, "_attach_broadcast", lambda df: False)
+    plain = dedup.minhash_probe_candidates(probe, sig)
+    # only the probe signatures (renamed sig_a by the attach) pass the gate
+    monkeypatch.setattr(dedup, "_attach_broadcast", lambda df: "sig_a" in df.columns)
+    probe_only = dedup.minhash_probe_candidates(probe, sig)
+
+    def hinted_joins(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return [
+            line for line in plan.splitlines()
+            if "Join Inner" in line and "strategy=broadcast" in line
+        ]
+
+    assert hinted_joins(plain) == []
+    hinted = hinted_joins(probe_only)
+    assert len(hinted) == 1, hinted
+    assert re.search(r"\(probe_id#\d+L = probe_id#\d+L\)", hinted[0]), hinted[0]
+    assert canon(probe_only) == canon(plain)
+    assert len(canon(plain)) > 0
+
+
+def _variant_corpus(spark, path):
+    """300 seeded random 30-token documents, the first 40 of them also in
+    three case/whitespace variants. A variant differs in bytes, so exact
+    dedup keeps it, but tokenizes like its original, so each group of four
+    is a 6-edge clique of identical simhashes. Read back from parquet like a
+    real corpus: over an in-memory relation AQE's job count varies by run."""
+    import random
+
+    rnd = random.Random(5)
+    vocab = [f"w{i}" for i in range(5000)]
+    texts = [" ".join(rnd.choice(vocab) for _ in range(30)) for _ in range(300)]
+    rows = list(enumerate(texts))
+    for c, t in enumerate(texts[:40]):
+        rows += [
+            (1000 + 3 * c, t.upper()),
+            (1001 + 3 * c, t.replace(" ", "  ")),
+            (1002 + 3 * c, " " + t.title()),
+        ]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+# Spark jobs of one simhash dedup_corpus pass over _variant_corpus, consuming
+# count included: the exact-dup and fingerprint stages, the candidate join,
+# connected_components' counted edge checkpoint and its one collect. Resolving
+# the same graph with the distributed label propagation takes over twenty.
+_SIMHASH_DEDUP_MAX_JOBS = 12
+
+
+def test_simhash_dedup_corpus_job_budget(spark, tmp_path):
+    """A small candidate graph is resolved on the driver, so a simhash
+    dedup runs no Spark job per propagation round."""
+    from mlforecast_spark.operators.dedup import dedup_corpus
+
+    docs = _variant_corpus(spark, str(tmp_path / "docs"))
+    sc = spark.sparkContext
+    group = "test_simhash_dedup_corpus_job_budget"
+    sc.setJobGroup(group, "job budget")
+    try:
+        survivors = dedup_corpus(docs, method="simhash").count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert survivors == 300
+    assert 0 < n_jobs <= _SIMHASH_DEDUP_MAX_JOBS, n_jobs

@@ -133,8 +133,12 @@ def test_lag_property(spark, data):
 )
 @given(data=st.data())
 def test_connected_components_property(spark, data):
-    """Random graphs vs a driver-side union-find."""
-    from mlforecast_spark.operators.dedup import connected_components
+    """Random graphs vs a driver-side union-find, on both the public entry
+    (small graphs finish on the driver) and the distributed path."""
+    from mlforecast_spark.operators.dedup import (
+        _connected_components_spark,
+        connected_components,
+    )
 
     n_nodes = data.draw(st.integers(2, 30))
     n_edges = data.draw(st.integers(1, 40))
@@ -165,13 +169,13 @@ def test_connected_components_property(spark, data):
         for n in members:
             want[n] = m
 
-    got = (
-        connected_components(spark.createDataFrame(edges, "id_a long, id_b long"))
-        .toPandas()
-        .set_index("node_id")["cluster_id"]
-        .to_dict()
-    )
-    assert got == want
+    frame = spark.createDataFrame(edges, "id_a long, id_b long")
+    for out in (
+        connected_components(frame),
+        _connected_components_spark(frame, "id_a", "id_b", max_iter=25),
+    ):
+        got = out.toPandas().set_index("node_id")["cluster_id"].to_dict()
+        assert got == want
 
 
 @settings(

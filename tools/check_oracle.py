@@ -86,9 +86,10 @@ def main():
     spark = get_spark(cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    # Both engines resident at once: at sf10 DuckDB's default budget (80%
-    # of RAM) plus Spark's 48g heap overcommits the box — the r10 sf10
-    # sweep got the JVM kernel-OOM-killed mid-run. Cap DuckDB explicitly
+    # Both engines resident at once: DuckDB's default budget (80% of RAM)
+    # plus Spark's default heap (60% of RAM, see
+    # utils._default_driver_memory) overcommits the machine; an sf10 sweep
+    # got the JVM kernel-OOM-killed mid-run. Cap DuckDB explicitly
     # (override via DUCK_MEM, e.g. DUCK_MEM=60GB for a DuckDB-heavy run).
     con.execute(
         f"SET memory_limit = '{__import__('os').environ.get('DUCK_MEM', '40GB')}'"
